@@ -141,6 +141,7 @@ def cmd_topology(args) -> int:
         print(json.dumps({
             "n_queries": len(sinks), "n_triggers": stats["n_triggers"],
             "trigger_secs": stats["trigger_secs"],
+            "phase_secs": stats["phase_secs"],
             "rows_per_query": {n: len(s.rows())
                                for n, s in sinks.items()}}))
         return 0

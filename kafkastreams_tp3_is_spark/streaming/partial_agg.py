@@ -54,11 +54,19 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.extremum import argmax, argmin
 from ..queries import _occupancy
 
 _OCC = "occupancyPercentage"
+
+
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes the JVM has compiled so far (the sample count of
+    Spark's CodegenMetrics compilation-time histogram)."""
+    return int(spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME().getCount())
 
 
 class KeyedAggStore:
@@ -81,6 +89,14 @@ class KeyedAggStore:
         self.partial_fn = partial_fn
         self.merge_exprs = merge_exprs
         self._template: DataFrame | None = None
+        # schema of the stored versions, known from the last write; None
+        # after a resume until the first read infers it. Reading with it
+        # skips the footer job that inference runs per read. The file
+        # reader makes a given schema nullable and lists partition
+        # columns last, exactly as inference would (pytest-pinned) —
+        # extremum._extreme picks its plan from the value column's
+        # nullability, so any difference would change q3/q10/q11 plans
+        self._schema: StructType | None = None
         # resume support: adopt the newest COMPLETE version — one whose
         # write committed (_SUCCESS marker); a dir from a write killed
         # mid-job must be ignored AND swept, otherwise adopting it would
@@ -115,7 +131,12 @@ class KeyedAggStore:
     def current(self) -> DataFrame | None:
         if self.version < 0:
             return None
-        return self.spark.read.parquet(self._vdir(self.version))
+        if self._schema is None:
+            cur = self.spark.read.parquet(self._vdir(self.version))
+            self._schema = cur.schema
+            return cur
+        return self.spark.read.schema(self._schema).parquet(
+            self._vdir(self.version))
 
     def frame(self) -> DataFrame:
         """The maintained aggregate (empty frame with the right schema
@@ -169,6 +190,7 @@ class KeyedAggStore:
             (merged.observe(obs, F.count(F.lit(1)).alias("n"))
              .write.mode("overwrite").parquet(self._vdir(batch_id)))
             self._stored_rows = int(obs.get["n"])
+            self._schema = merged.schema
             self.version = batch_id
             if old:
                 shutil.rmtree(old, ignore_errors=True)
@@ -224,6 +246,9 @@ class BucketedAggStore:
         self.merge_exprs = merge_exprs
         self.n_buckets = n_buckets
         self._template: DataFrame | None = None
+        # stored schema incl. the _bucket partition column, as
+        # KeyedAggStore._schema
+        self._schema: StructType | None = None
         self.version = -1
         #: bucket -> {"v": version dir holding its rows, "rows": count}
         self.buckets: dict[int, dict] = {}
@@ -326,21 +351,26 @@ class BucketedAggStore:
         for v, bs in sorted(by_version.items()):
             all_in_v = [b for b, e in self.buckets.items()
                         if e["v"] == v]
+            # a fresh reader per version: option() mutates the reader
+            reader = (self.spark.read if self._schema is None
+                      else self.spark.read.schema(self._schema))
             if set(bs) == set(all_in_v):
                 # every bucket this version holds is wanted: one root
                 # read (partition discovery supplies _bucket) beats
                 # listing each bucket dir explicitly — this is the
                 # full-touch fast path, so degenerate all-keys batches
                 # cost close to the plain store
-                frames.append(self.spark.read.parquet(self._vdir(v)))
+                frames.append(reader.parquet(self._vdir(v)))
             else:
                 frames.append(
-                    self.spark.read.option("basePath", self._vdir(v))
+                    reader.option("basePath", self._vdir(v))
                     .parquet(*[os.path.join(self._vdir(v),
                                             f"_bucket={b}")
                                for b in bs]))
         if not frames:
             return None
+        if self._schema is None:
+            self._schema = frames[0].schema
         cur = frames[0]
         for f in frames[1:]:
             cur = cur.unionByName(f)
@@ -403,6 +433,7 @@ class BucketedAggStore:
             (merged.write.partitionBy("_bucket")
              .mode("overwrite").parquet(self._vdir(batch_id)))
             merged.unpersist()
+            self._schema = merged.schema
             for b in changed:
                 self.buckets[b] = {"v": batch_id,
                                    "rows": int(counts.get(b, 0))}
@@ -741,7 +772,9 @@ class IncrementalAggHarness:
         self.trigger_secs: list[float] = []
         # per-trigger phase walls (parse+count, store merges, finalize
         # fan-out) — the floor analysis for the trigger latency: shows
-        # which tier bounds a further speedup
+        # which tier bounds a further speedup. Each record also carries
+        # codegen_compiles: generated classes compiled during the trigger
+        # (JVM-wide count), ~0 once the codegen cache holds the topology
         self.phase_secs: list[dict] = []
         self._schemas = {}
 
@@ -808,7 +841,17 @@ class IncrementalAggHarness:
         # replaces the former default of 8; measured 6.1 -> ~4.4 s mean
         # trigger at sf0.1. The per-store agg frame persist happens
         # exactly once behind a lock, after that store's own update.
-        pool_size = int(os.environ.get("SPARK_GRAFT_TOPO_THREADS", "13"))
+        #
+        # Fixed per-trigger cost (sf0.01 trickle: ~1.9k fact rows per
+        # trigger against ~41k store rows, local[4]): ~2.8 s, down from
+        # ~4.2 s. Two conditions hold it there. The codegen cache must
+        # hold the topology's 180-198 generated classes (get_spark sizes
+        # it; at Spark's default of 100 every trigger recompiled them,
+        # ~4 CPU-s) — phase_secs' codegen_compiles reads ~0 when it does.
+        # And stores read with the schema they wrote: inferring it cost
+        # a footer job per read, 8 per trigger, 4 of them serialized
+        # under agg_lock below.
+        pool_size = 13
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
             import threading
@@ -816,6 +859,7 @@ class IncrementalAggHarness:
             from concurrent.futures import ThreadPoolExecutor
 
             t0 = _time.perf_counter()
+            compiles0 = _codegen_compiles(self.spark)
             t1 = t2 = None
             ok = False
             batch_df = batch_df.persist()
@@ -922,6 +966,8 @@ class IncrementalAggHarness:
                                     if t2 is not None else -1.0),
                     "finalize": (round(now - t2, 4)
                                  if (ok and t2 is not None) else -1.0),
+                    "codegen_compiles":
+                        _codegen_compiles(self.spark) - compiles0,
                     "failed": not ok})
                 self.trigger_secs.append(round(now - t0, 4))
 

@@ -17,9 +17,20 @@ so the attachment always rides the frame the caller actually holds.
 bench.py's per-query clearCache remains correct for its
 one-process-per-run usage; ``release`` is the surgical tool for
 embedders.
+
+Scratch directories follow a coarser lifetime: ``scratch_dir`` hands
+out a fresh directory that is removed at PROCESS EXIT, never earlier.
+Fixtures and build-once stores return lazy DataFrames over such
+directories, and a caller may hold one unevaluated for arbitrarily long,
+so process exit is the only point where deletion is provably safe.
 """
 
 from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -91,3 +102,29 @@ def release(df: DataFrame, consumed: bool = True) -> None:
         for f in checkpointed(df):
             _free_checkpoint_blocks(f)
         setattr(df, _ATTR_CKPT, [])
+
+
+_SCRATCH_DIRS: list[str] = []
+_SCRATCH_HOOKED = False
+_SCRATCH_LOCK = threading.Lock()
+
+
+def _remove_scratch_dirs() -> None:
+    with _SCRATCH_LOCK:
+        for d in _SCRATCH_DIRS:
+            shutil.rmtree(d, ignore_errors=True)
+        _SCRATCH_DIRS.clear()
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp directory (``mkdtemp(prefix=prefix)``) that lives
+    until process exit; one ``atexit`` hook removes every directory
+    handed out. Safe to call from concurrent threads."""
+    global _SCRATCH_HOOKED
+    path = tempfile.mkdtemp(prefix=prefix)
+    with _SCRATCH_LOCK:
+        _SCRATCH_DIRS.append(path)
+        if not _SCRATCH_HOOKED:
+            atexit.register(_remove_scratch_dirs)
+            _SCRATCH_HOOKED = True
+    return path

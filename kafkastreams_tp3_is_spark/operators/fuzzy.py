@@ -44,6 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import scratch_dir
 from ..views import load, spread
 
 
@@ -435,8 +436,6 @@ def edit_distance_pairs_all_df(docs: DataFrame, max_dist: int = 2,
 # each entry still scans the corpus for texts and runs its own exact
 # Levenshtein verify + composition. A fresh process (every driver
 # bench/verify invocation) always regenerates from the parquet inputs.
-_CANDS_DIRS: list[str] = []
-_CANDS_ATEXIT = False
 # (sf_dir, max_dist, min_len) -> (session, parquet dir)
 _CANDS_CACHE: dict[tuple, tuple] = {}
 
@@ -464,21 +463,11 @@ def _ensure_fixture_candidates(spark: SparkSession, sf_dir: str,
     inventory: first call per (session, sf_dir, d) generates the
     PassJoin candidates over the shared planted corpus and writes them
     to a scratch parquet; later calls return the path untouched."""
-    import atexit
-    import shutil
-    import tempfile
-
-    global _CANDS_ATEXIT
     key = (sf_dir, int(max_dist), int(min_len))
     hit = _CANDS_CACHE.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
-    workdir = tempfile.mkdtemp(prefix="fuzzy_cands_")
-    _CANDS_DIRS.append(workdir)
-    if not _CANDS_ATEXIT:
-        atexit.register(lambda: [shutil.rmtree(d, ignore_errors=True)
-                                 for d in _CANDS_DIRS])
-        _CANDS_ATEXIT = True
+    workdir = scratch_dir("fuzzy_cands_")
     base = _long_base(_fixture_long_corpus(spark, sf_dir), min_len)
     (_long_candidates(base, max_dist, min_len)
      .write.mode("overwrite").parquet(os.path.join(workdir, "cands")))

@@ -38,13 +38,13 @@ the training-data-pipeline surface the engine adds on top.
 
 from __future__ import annotations
 
-import itertools
 import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import scratch_dir
 from ..views import load
 from .similarity import _as_double, _cosine, _dot, _norm
 
@@ -592,23 +592,6 @@ _STORED_INDEX_CACHE: dict[tuple[str, bool], str] = {}
 # PID-scoped directory (the overwrite deleting files mid-scan of the
 # first thread's already-returned DataFrame)
 _STORED_INDEX_LOCK = threading.Lock()
-# monotone per-process version counter for the build-every-call fixture
-_BUILD_SEQ = itertools.count()
-# versioned scratch dirs created by ann_cosine_topk_stored; removed at
-# PROCESS EXIT (atexit), never mid-session — a caller may hold an
-# unevaluated DataFrame over any prior call's directory for arbitrarily
-# long, so the only point where deletion is provably safe is after the
-# last possible evaluation (ADVICE r7: the old newest-two policy
-# assumed synchronous consumption the API never promised)
-_BUILD_DIRS: list[str] = []
-_ATEXIT_REGISTERED = False
-
-
-def _cleanup_build_dirs() -> None:
-    import shutil
-
-    for d in _BUILD_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def ensure_stored_index(spark: SparkSession, sf_dir: str,
@@ -674,35 +657,20 @@ def ann_cosine_topk_stored(spark: SparkSession, sf_dir: str,
                            n_queries: int = 5, k: int = 10,
                            nprobe: int = 12) -> DataFrame:
     """Driver-gate fixture (rows-only; recall floor pytest-enforced):
-    build the persisted index in a fresh PID-scoped scratch directory,
-    then answer the same query set as the other top-k fixtures through
-    it. The build is deliberately part of THIS fixture (the gate needs a
-    pure (spark, sf_dir) -> DataFrame function and the build path must
-    stay exercised); the build-once/probe-many production shape is the
+    build the persisted index in a fresh scratch directory, then answer
+    the same query set as the other top-k fixtures through it. The build
+    is deliberately part of THIS fixture (the gate needs a pure
+    (spark, sf_dir) -> DataFrame function and the build path must stay
+    exercised); the build-once/probe-many production shape is the
     separate ann_cosine_topk_stored_probe entry. Each call builds into
-    its own versioned directory — never overwriting one a prior call's
+    its own ``cache.scratch_dir`` — never overwriting one a prior call's
     lazily-evaluated DataFrame may still read — and every directory
-    survives until PROCESS EXIT (atexit cleanup): results from this
-    function stay valid for the whole session with no synchronous-
-    consumption assumption. Scratch growth is one small index copy
-    (a few MB at gate scale) per call — bench/gate call counts are
-    single digits per process."""
-    import atexit
-    import hashlib
-    import os
-    import tempfile
-
-    global _ATEXIT_REGISTERED
+    survives until process exit: results from this function stay valid
+    for the whole session with no synchronous-consumption assumption.
+    Scratch growth is one small index copy (a few MB at gate scale) per
+    call — bench/gate call counts are single digits per process."""
     emb = load(spark, sf_dir, "embeddings")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    index_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"ivf_index_{tag}_{os.getpid()}_v{next(_BUILD_SEQ)}")
-    with _STORED_INDEX_LOCK:
-        _BUILD_DIRS.append(index_dir)
-        if not _ATEXIT_REGISTERED:
-            atexit.register(_cleanup_build_dirs)
-            _ATEXIT_REGISTERED = True
+    index_dir = scratch_dir("ivf_index_")
     build_ivf_index(emb, index_dir, n_centroids=32, m_assign=2)
     queries = _stored_query_set(spark, sf_dir, n_queries)
     return query_ivf_index(spark, index_dir, queries, k=k, nprobe=nprobe)

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import scratch_dir
 from ..views import load, spread
 
 # Small per-language stopword marker sets for the n-gram-free heuristic
@@ -1059,8 +1060,6 @@ def _encode_dictionary(new_docs: DataFrame,
             .select("tok", syms.alias("syms")))
 
 
-_TOKENIZER_DIRS: list[str] = []
-_TOKENIZER_ATEXIT = False
 # (sf_dir, n_merges) -> (session, workdir): the incremental-tokenizer
 # gates (bpe_encode_increment, bpe_oov_rate, and the streaming encode
 # demo's batch oracle) all train THE SAME even-half tokenizer over the
@@ -1098,11 +1097,6 @@ def _increment_tokenizer(spark: SparkSession, sf_dir: str, n_merges: int,
     the EVEN-doc_id half, persist to a scratch parquet store, read the
     stored tokenizer back; returns (odd-half increment frame, stored
     merges frame, stored vocab frame)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    global _TOKENIZER_ATEXIT
     if n_merges != 8:
         raise ValueError(
             f"{caller} oracle pins n_merges=8; got "
@@ -1116,13 +1110,7 @@ def _increment_tokenizer(spark: SparkSession, sf_dir: str, n_merges: int,
     if hit is not None and hit[0] is spark:
         workdir = hit[1]
     else:
-        workdir = tempfile.mkdtemp(prefix="bpe_tokenizer_")
-        _TOKENIZER_DIRS.append(workdir)
-        if not _TOKENIZER_ATEXIT:
-            atexit.register(
-                lambda: [shutil.rmtree(d, ignore_errors=True)
-                         for d in _TOKENIZER_DIRS])
-            _TOKENIZER_ATEXIT = True
+        workdir = scratch_dir("bpe_tokenizer_")
         bpe_persist_tokenizer(base, workdir, n_merges)
         _TOKENIZER_STORE_CACHE[key] = (spark, workdir)
     merges_df = spark.read.parquet(os.path.join(workdir, "merges"))

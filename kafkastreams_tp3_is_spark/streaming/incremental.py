@@ -1,27 +1,31 @@
-"""Streaming corpus ingestion with incremental near-dup suppression —
-the production loop the batch operators compose into: documents arrive
-continuously, and only never-seen-before content reaches the training
-corpus.
+"""foreachBatch sinks of the crawl-increment loop — every stage that
+turns an arriving document or vector stream into maintained training
+state without re-reading what already arrived: near-dup corpus
+ingestion (StreamingCorpusDedup, StreamingSemanticDedup), exact-substring
+scrub (StreamingSpanScrubber), DSIR selection (StreamingDsirSelector),
+BPE encoding (StreamingBpeEncoder) and IVF index maintenance
+(StreamingIvfIndexer), plus their driver-gate demo fixtures.
 
-Per micro-batch (foreachBatch):
-  1. signatures for the BATCH are computed once (shingle + minhash);
-  2. within-batch dedup: LSH pairs over the batch signatures ->
-     connected components -> keep each cluster's canonical (minimum
-     doc_id) document;
-  3. cross-corpus dedup: band-join the surviving batch signatures
-     against the persisted SIGNATURE STORE (a parquet table of
-     (doc_id, shingles, minhash) maintained beside the corpus) — the
-     corpus text is never re-shingled;
-  4. surviving documents append to the corpus store, their signatures
-     append to the signature store.
+Sink contract (``ForeachBatchSink``, shared by all six). Structured
+Streaming gives exactly-once output from a replayable source plus an
+idempotent sink; foreachBatch itself is at-least-once, because a
+recovered query re-runs its last uncommitted batch id. So every sink:
 
-Per-trigger compute cost is therefore O(|batch| shingling + band-join
-fan-in), and the corpus side contributes a columnar signature SCAN, not
-recompute — signatures are a pure function of content, so the store is a
-cache that is never invalidated. (Round 3 recomputed corpus signatures
-every trigger and documented it as the production gap; this closes it,
-and the pytest pins that the corpus text column is read only by the
-terminal append, not by the dedup path.)
+  1. writes micro-batch ``<id>`` into ``<store>/batch=<id>``
+     subdirectories with mode('overwrite'): a replayed id replaces its
+     own partial output instead of appending a duplicate, with no
+     transaction across the sink's stores. Accumulated state read while
+     processing batch ``<id>`` excludes ``batch=<id>``, so a retry never
+     dedups against its own first attempt. (StreamingDsirSelector keeps
+     versioned ``v<id>`` state committed through ``_latest.json`` and
+     skips ids at or below the committed version instead.)
+  2. guards the batch-id sequence: ``run`` records the checkpoint path
+     in ``_checkpoint_marker.json`` before the first trigger and refuses
+     a different checkpoint, a store that holds batches but no marker,
+     and an unreadable marker. A fresh checkpoint restarts ids at 0,
+     which would silently overwrite committed batches (or, for DSIR,
+     drop every new batch as a replay). ``adopt_checkpoint=True`` claims
+     such a store as an explicit operator decision.
 
 All heavy work is DataFrame-distributed; the driver only coordinates.
 """
@@ -34,18 +38,162 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import scratch_dir
 from ..operators.dedup import (compute_signatures_df, dedup_against_sigs_df,
                                dedup_minhash_lsh_from_sigs)
 from ..operators.graph import connected_components_df
 from ..operators.pipeline import build_pipeline
 
 
-class StreamingCorpusDedup:
+class ForeachBatchSink:
+    """The sink contract of the module docstring, written once. A
+    subclass passes its marker directory and its ``batch=<id>`` store
+    roots (``{label: path}``; the labels name the stores in guard
+    errors) and implements ``process(batch_df, batch_id)``."""
+
+    def __init__(self, spark: SparkSession, marker_dir: str,
+                 stores: dict[str, str]):
+        self.spark = spark
+        self._marker_dir = marker_dir
+        self._stores = stores
+
+    def process(self, batch_df: DataFrame, batch_id: int) -> None:
+        raise NotImplementedError
+
+    def run(self, stream: DataFrame, checkpoint_dir: str,
+            adopt_checkpoint: bool = False) -> None:
+        """Drain ``stream`` through ``process`` (availableNow) under
+        ``checkpoint_dir``, after the checkpoint-marker guard."""
+        self._guard_checkpoint(checkpoint_dir, adopt=adopt_checkpoint)
+        q = (stream.writeStream
+             .foreachBatch(self.process)
+             .outputMode("append")
+             .option("checkpointLocation", checkpoint_dir)
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
+
+    @staticmethod
+    def _batch_dirs(root: str, exclude_batch: int | None = None) -> list[str]:
+        if not os.path.isdir(root):
+            return []
+        return sorted(os.path.join(root, d) for d in os.listdir(root)
+                      if d.startswith("batch=")
+                      and d != f"batch={exclude_batch}")
+
+    def _read_store(self, root: str,
+                    exclude_batch: int | None = None) -> DataFrame | None:
+        """Every ``batch=<id>`` subdirectory of ``root`` (minus
+        ``exclude_batch``) as one frame, or None when there is none."""
+        dirs = self._batch_dirs(root, exclude_batch)
+        if not dirs:
+            return None
+        # partition discovery adds the batch column; drop it — it is a
+        # write-idempotence mechanism, not data
+        return self.spark.read.option("basePath", root).parquet(
+            *dirs).drop("batch")
+
+    def _has_state(self) -> bool:
+        """Committed batches in ANY store root: the stores share one
+        batch-id sequence, so a stale second store under a fresh first
+        one is just as corrupting (e.g. ghost signatures would suppress
+        new documents forever)."""
+        return any(self._batch_dirs(root) for root in self._stores.values())
+
+
+
+    def _delete_dir(self, path: str) -> None:
+        """Recursive delete via the Hadoop FileSystem API — works for
+        local paths, HDFS, and object stores alike (the same route
+        graph.py's round rotation uses)."""
+        sc = self.spark.sparkContext
+        jp = sc._jvm.org.apache.hadoop.fs.Path(path)
+        jp.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jp, True)
+
+    def _guard_checkpoint(self, checkpoint_dir: str,
+                          adopt: bool = False) -> None:
+        """Record ``checkpoint_dir`` in the marker, or refuse to run
+        (module docstring, contract 2). A marker pointing elsewhere over
+        EMPTY stores is harmless (nothing to clobber) and is rewritten.
+
+        The marker lives on a LOCAL filesystem (plain open/os.replace —
+        the store dirs themselves may be remote, but this guard's
+        read-modify-write protocol assumes POSIX semantics; a fully
+        remote deployment would keep the marker in its coordination
+        store instead). Writes go through a temp file + os.replace so a
+        crash mid-write can never leave truncated JSON; an unreadable
+        marker fails fast with the same refuse-to-run guidance as a
+        missing one, instead of an opaque decode error."""
+        ckpt = os.path.abspath(checkpoint_dir)
+        marker = os.path.join(self._marker_dir, "_checkpoint_marker.json")
+        stores = " + ".join(f"{label} {root!r}"
+                            for label, root in self._stores.items())
+        has_state = self._has_state()
+        if os.path.isfile(marker):
+            try:
+                with open(marker) as f:
+                    recorded = json.load(f).get("checkpoint_dir")
+            except (json.JSONDecodeError, OSError) as exc:
+                if not adopt:
+                    raise RuntimeError(
+                        f"checkpoint marker {marker!r} exists but cannot "
+                        f"be read ({exc}) — refusing to run a stream over "
+                        f"{stores} (batch-id collisions would silently "
+                        "overwrite data). Restore or delete the marker, "
+                        "or pass adopt_checkpoint=True if this checkpoint "
+                        "genuinely owns the store.") from exc
+                recorded = None  # adopt: rewrite the marker below
+            if recorded == ckpt:
+                return
+            if has_state and not adopt:
+                raise RuntimeError(
+                    f"{stores} was built by the stream checkpointed at "
+                    f"{recorded!r}; running it with checkpoint {ckpt!r} "
+                    "would restart batch ids at 0 and collide with the "
+                    "committed batches. Resume with the original "
+                    "checkpoint, point at a fresh store, or pass "
+                    "adopt_checkpoint=True to claim the store "
+                    "deliberately.")
+        elif has_state and not adopt:
+            raise RuntimeError(
+                f"{stores} holds committed batches but no checkpoint "
+                "marker — refusing to run a stream over it (batch-id "
+                "collisions would silently overwrite data). Point at a "
+                "fresh store, or pass adopt_checkpoint=True if this "
+                "checkpoint genuinely owns the store (pre-marker "
+                "deployments resuming their original checkpoint).")
+        os.makedirs(self._marker_dir, exist_ok=True)
+        tmp = marker + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump({"checkpoint_dir": ckpt}, f)
+        os.replace(tmp, marker)
+
+
+class StreamingCorpusDedup(ForeachBatchSink):
     """foreachBatch sink: maintain a near-dup-free corpus under a stream
     of (doc_id, text) documents. Exactly-once per document content: a
     near-dup arriving in the same batch as its original, in a later
     batch, or transitively through a chain is suppressed either by the
-    within-batch clustering or by the cross-corpus check."""
+    within-batch clustering or by the cross-corpus check.
+
+    Per micro-batch:
+      1. signatures for the BATCH are computed once (shingle + minhash);
+      2. within-batch dedup: LSH pairs over the batch signatures ->
+         connected components -> keep each cluster's canonical (minimum
+         doc_id) document;
+      3. cross-corpus dedup: band-join the surviving batch signatures
+         against the persisted SIGNATURE STORE (a parquet table of
+         (doc_id, shingles, minhash) maintained beside the corpus) — the
+         corpus text is never re-shingled;
+      4. surviving documents append to the corpus store, their
+         signatures append to the signature store.
+
+    Per-trigger compute cost is therefore O(|batch| shingling + band-join
+    fan-in), and the corpus side contributes a columnar signature SCAN,
+    not recompute — signatures are a pure function of content, so the
+    store is a cache that is never invalidated (the pytest pins that the
+    corpus text column is read only by the terminal append, not by the
+    dedup path)."""
 
     def __init__(self, spark: SparkSession, corpus_dir: str,
                  jaccard_threshold: float = 0.8, k: int = 9,
@@ -53,9 +201,10 @@ class StreamingCorpusDedup:
                  sig_dir: str | None = None,
                  clean_spec: list[dict] | None = None,
                  cc_checkpoint_dir: str | None = None):
-        self.spark = spark
         self.corpus_dir = corpus_dir
         self.sig_dir = sig_dir or corpus_dir.rstrip("/") + "_sigs"
+        super().__init__(spark, corpus_dir, {"corpus": corpus_dir,
+                                             "signature store": self.sig_dir})
         self.threshold = jaccard_threshold
         self.k = k
         self.num_hashes = num_hashes
@@ -72,21 +221,6 @@ class StreamingCorpusDedup:
         # executor (see connected_components_df docstring)
         self.cc_checkpoint_dir = cc_checkpoint_dir
 
-    def _read_store(self, root: str,
-                    exclude_batch: int | None = None) -> DataFrame | None:
-        if not os.path.isdir(root):
-            return None
-        subdirs = [d for d in os.listdir(root)
-                   if d.startswith("batch=")
-                   and (exclude_batch is None
-                        or d != f"batch={exclude_batch}")]
-        if not subdirs:
-            return None
-        # partition discovery adds the batch column; drop it — it is a
-        # write-idempotence mechanism, not data
-        return self.spark.read.option("basePath", root).parquet(
-            *[os.path.join(root, d) for d in subdirs]).drop("batch")
-
     def _stored_sigs(self, exclude_batch: int) -> DataFrame | None:
         """Stored corpus signatures EXCLUDING the current batch's own
         subdirectory: on a foreachBatch retry the first attempt's
@@ -94,14 +228,6 @@ class StreamingCorpusDedup:
         retried batch against its own prior attempt would suppress every
         document and overwrite the store with an empty survivor set."""
         return self._read_store(self.sig_dir, exclude_batch=exclude_batch)
-
-    def _delete_dir(self, path: str) -> None:
-        """Recursive delete via the Hadoop FileSystem API — works for
-        local paths, HDFS, and object stores alike (the same route
-        graph.py's round rotation uses)."""
-        sc = self.spark.sparkContext
-        jp = sc._jvm.org.apache.hadoop.fs.Path(path)
-        jp.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jp, True)
 
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches += 1
@@ -168,94 +294,6 @@ class StreamingCorpusDedup:
             if cc_dir is not None:
                 self._delete_dir(cc_dir)
 
-    def _has_batches(self) -> bool:
-        """Batch subdirectories in EITHER store: the corpus and the
-        signature store share the batch-id overwrite discipline, so a
-        stale sig_dir under a fresh corpus_dir is just as corrupting
-        (cross-corpus dedup would match new documents against ghost
-        signatures of documents no longer in the corpus)."""
-        return any(
-            os.path.isdir(root) and any(d.startswith("batch=")
-                                        for d in os.listdir(root))
-            for root in (self.corpus_dir, self.sig_dir))
-
-    def _guard_checkpoint(self, checkpoint_dir: str,
-                          adopt: bool = False) -> None:
-        """Overwrite-per-batch_id idempotence assumes THIS checkpoint's
-        batch-id sequence owns BOTH stores (corpus + signatures). A fresh
-        checkpoint restarts batch ids at 0, and mode('overwrite') would
-        silently clobber batch=0,1,... from the earlier run while leaving
-        higher batches — a corrupted mixed store with no error. Record
-        the checkpoint path in a marker file beside the corpus batches
-        and fail fast on mismatch instead of overwriting. A marker
-        pointing elsewhere over EMPTY stores is harmless (nothing to
-        clobber) and is rewritten. ``adopt=True`` claims a pre-marker
-        store (e.g. one built before markers existed) for this
-        checkpoint — an explicit operator decision, never the default.
-
-        The marker lives on a LOCAL filesystem (plain open/os.replace —
-        the store dirs themselves may be remote, but this guard's
-        read-modify-write protocol assumes POSIX semantics; a fully
-        remote deployment would keep the marker in its coordination
-        store instead). Writes go through a temp file + os.replace so a
-        crash mid-write can never leave truncated JSON; an unreadable
-        marker fails fast with the same refuse-to-run guidance as a
-        missing one, instead of an opaque decode error."""
-        ckpt = os.path.abspath(checkpoint_dir)
-        marker = os.path.join(self.corpus_dir, "_checkpoint_marker.json")
-        has_batches = self._has_batches()
-        if os.path.isfile(marker):
-            try:
-                with open(marker) as f:
-                    recorded = json.load(f).get("checkpoint_dir")
-            except (json.JSONDecodeError, OSError) as exc:
-                if not adopt:
-                    raise RuntimeError(
-                        f"checkpoint marker {marker!r} exists but cannot "
-                        f"be read ({exc}) — refusing to run a stream over "
-                        f"{self.corpus_dir!r} (batch-id collisions would "
-                        "silently overwrite data). Restore or delete the "
-                        "marker, or pass adopt_checkpoint=True if this "
-                        "checkpoint genuinely owns the store.") from exc
-                recorded = None  # adopt: rewrite the marker below
-            if recorded == ckpt:
-                return
-            if has_batches and not adopt:
-                raise RuntimeError(
-                    f"store {self.corpus_dir!r} (+ sigs {self.sig_dir!r}) "
-                    f"was built by the stream checkpointed at {recorded!r}; "
-                    f"running it with checkpoint {ckpt!r} would restart "
-                    "batch ids at 0 and overwrite earlier batches. Resume "
-                    "with the original checkpoint, point at a fresh "
-                    "corpus_dir, or pass adopt_checkpoint=True to claim "
-                    "the store deliberately.")
-        elif has_batches and not adopt:
-            raise RuntimeError(
-                f"store {self.corpus_dir!r} (or its signature store "
-                f"{self.sig_dir!r}) contains batch subdirectories but no "
-                "checkpoint marker — refusing to run a stream over it "
-                "(batch-id collisions would silently overwrite data). "
-                "Point at a fresh corpus_dir, or pass "
-                "adopt_checkpoint=True if this checkpoint genuinely owns "
-                "the store (pre-marker deployments resuming their "
-                "original checkpoint).")
-        os.makedirs(self.corpus_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"checkpoint_dir": ckpt}, f)
-        os.replace(tmp, marker)
-
-    def run(self, doc_stream: DataFrame, checkpoint_dir: str,
-            adopt_checkpoint: bool = False) -> None:
-        self._guard_checkpoint(checkpoint_dir, adopt=adopt_checkpoint)
-        q = (doc_stream.writeStream
-             .foreachBatch(self.process)
-             .outputMode("append")
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
     def corpus(self) -> DataFrame:
         out = self._read_store(self.corpus_dir)
         if out is None:
@@ -319,7 +357,7 @@ class StreamingCorpusDedup:
                     shutil.rmtree(os.path.join(root, d))
 
 
-class StreamingBpeEncoder:
+class StreamingBpeEncoder(ForeachBatchSink):
     """foreachBatch sink: tokenize arriving documents per-trigger
     against a PERSISTED BPE tokenizer (``bpe_persist_tokenizer``'s
     merges + vocab parquet store) and append the (doc_id, pos, symbol,
@@ -331,17 +369,13 @@ class StreamingBpeEncoder:
     replay over the batch's distinct tokens — vocabulary-bounded) plus
     two broadcast joins linear in the batch's token occurrences; the
     merge list is collected ONCE at construction (contract-bounded:
-    one row per trained merge). Writes use the batch=<id> overwrite
-    discipline shared with StreamingCorpusDedup, so a foreachBatch
-    retry replaces its own partial output instead of duplicating
-    token rows, and a checkpoint marker guards the store against a
-    foreign checkpoint's restarting batch ids."""
+    one row per trained merge)."""
 
     def __init__(self, spark: SparkSession, tokenizer_dir: str,
                  out_dir: str):
         from ..operators.text import bpe_encode_with_merges  # noqa: F401
 
-        self.spark = spark
+        super().__init__(spark, out_dir, {"token store": out_dir})
         self.out_dir = out_dir
         merges_df = spark.read.parquet(
             os.path.join(tokenizer_dir, "merges"))
@@ -360,63 +394,11 @@ class StreamingBpeEncoder:
         enc.write.mode("overwrite").parquet(
             os.path.join(self.out_dir, f"batch={batch_id}"))
 
-    def _guard_checkpoint(self, checkpoint_dir: str) -> None:
-        """The overwrite-per-batch_id idempotence is only safe under
-        ONE checkpoint's batch-id sequence (see StreamingCorpusDedup's
-        guard for the full rationale); same marker discipline, one
-        store."""
-        ckpt = os.path.abspath(checkpoint_dir)
-        marker = os.path.join(self.out_dir, "_checkpoint_marker.json")
-        has_batches = (os.path.isdir(self.out_dir)
-                       and any(d.startswith("batch=")
-                               for d in os.listdir(self.out_dir)))
-        if os.path.isfile(marker):
-            with open(marker) as f:
-                recorded = json.load(f).get("checkpoint_dir")
-            if recorded == ckpt:
-                return
-            if has_batches:
-                raise RuntimeError(
-                    f"token store {self.out_dir!r} was built by the "
-                    f"stream checkpointed at {recorded!r}; running it "
-                    f"with checkpoint {ckpt!r} would restart batch ids "
-                    "at 0 and overwrite earlier batches.")
-        elif has_batches:
-            raise RuntimeError(
-                f"token store {self.out_dir!r} contains batch "
-                "subdirectories but no checkpoint marker — refusing to "
-                "run a stream over it (batch-id collisions would "
-                "silently overwrite data).")
-        os.makedirs(self.out_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"checkpoint_dir": ckpt}, f)
-        os.replace(tmp, marker)
-
-    def run(self, doc_stream: DataFrame, checkpoint_dir: str) -> None:
-        self._guard_checkpoint(checkpoint_dir)
-        q = (doc_stream.writeStream
-             .foreachBatch(self.process)
-             .outputMode("append")
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
     def tokens(self) -> DataFrame:
-        root = self.out_dir
-        subdirs = ([d for d in os.listdir(root) if d.startswith("batch=")]
-                   if os.path.isdir(root) else [])
-        if not subdirs:
-            raise FileNotFoundError(f"no token batches at {root}")
-        return (self.spark.read.option("basePath", root)
-                .parquet(*[os.path.join(root, d) for d in subdirs])
-                .drop("batch")
-                .select("doc_id", "pos", "symbol", "token_id"))
-
-
-_BPE_STREAM_DIRS: list[str] = []
-_BPE_STREAM_ATEXIT = False
+        out = self._read_store(self.out_dir)
+        if out is None:
+            raise FileNotFoundError(f"no token batches at {self.out_dir}")
+        return out.select("doc_id", "pos", "symbol", "token_id")
 
 
 def bpe_encode_increment_stream(spark: SparkSession,
@@ -432,21 +414,10 @@ def bpe_encode_increment_stream(spark: SparkSession,
     bit-identical row set, whatever the file-to-trigger assignment.
     Scratch dirs live until process exit (the stored-IVF-index
     pattern) so the returned frame stays valid lazily."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.text import bpe_persist_tokenizer
     from ..views import load
 
-    global _BPE_STREAM_ATEXIT
-    workdir = tempfile.mkdtemp(prefix="bpe_stream_")
-    _BPE_STREAM_DIRS.append(workdir)
-    if not _BPE_STREAM_ATEXIT:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True)
-                     for d in _BPE_STREAM_DIRS])
-        _BPE_STREAM_ATEXIT = True
+    workdir = scratch_dir("bpe_stream_")
 
     docs = load(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % 2 == 0)
@@ -464,7 +435,7 @@ def bpe_encode_increment_stream(spark: SparkSession,
     return sink.tokens()
 
 
-class StreamingDsirSelector:
+class StreamingDsirSelector(ForeachBatchSink):
     """foreachBatch sink: maintain the running DSIR top-k over a stream
     of arriving documents, scored per trigger against PERSISTED bucket
     stats (``dsir_persist_stats``'s store) — the importance-resampling
@@ -486,7 +457,7 @@ class StreamingDsirSelector:
                  n_buckets: int | None = None, k: int = 50):
         from ..operators.dsir import N_BUCKETS
 
-        self.spark = spark
+        super().__init__(spark, out_dir, {"selection state": out_dir})
         self.out_dir = out_dir
         self.n_buckets = n_buckets or N_BUCKETS
         self.k = k
@@ -535,50 +506,13 @@ class StreamingDsirSelector:
             shutil.rmtree(os.path.join(self.out_dir, f"v{old}"),
                           ignore_errors=True)
 
-    def _guard_checkpoint(self, checkpoint_dir: str) -> None:
-        """Same hazard class as StreamingBpeEncoder._guard_checkpoint:
-        the ``batch_id <= self.version`` replay check is only sound
-        under ONE checkpoint's monotone batch-id sequence. Reusing a
-        committed state dir with a FRESH checkpoint restarts ids at 0,
-        and every new batch would then be silently dropped as a
-        'replay' — silent data loss, worse than the encoder's
-        overwrite. Record the checkpoint path at first run; refuse on
-        mismatch while committed state exists."""
-        ckpt = os.path.abspath(checkpoint_dir)
-        marker = os.path.join(self.out_dir, "_checkpoint_marker.json")
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                recorded = json.load(fh).get("checkpoint_dir")
-            if recorded == ckpt:
-                return
-            if self.version >= 0:
-                raise RuntimeError(
-                    f"selection state {self.out_dir!r} was built by the "
-                    f"stream checkpointed at {recorded!r}; running it "
-                    f"with checkpoint {ckpt!r} would restart batch ids "
-                    "at 0 and the replay guard would silently drop "
-                    "every new batch.")
-        elif self.version >= 0:
-            raise RuntimeError(
-                f"selection state {self.out_dir!r} has a committed "
-                "version but no checkpoint marker — refusing to run a "
-                "stream over it (a restarted batch-id sequence would "
-                "be silently dropped as replays).")
-        os.makedirs(self.out_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"checkpoint_dir": ckpt}, fh)
-        os.replace(tmp, marker)
-
-    def run(self, doc_stream: DataFrame, checkpoint_dir: str) -> None:
-        self._guard_checkpoint(checkpoint_dir)
-        q = (doc_stream.writeStream
-             .foreachBatch(self.process)
-             .outputMode("append")
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    def _has_state(self) -> bool:
+        """Committed state is the last ``v<id>`` version, not batch
+        dirs. The ``batch_id <= self.version`` replay check is only
+        sound under ONE checkpoint's monotone batch-id sequence: under a
+        fresh checkpoint every new batch would be silently dropped as a
+        'replay'."""
+        return self.version >= 0
 
     def selected(self) -> DataFrame:
         """The running top-k in dsir_select_increment's emit contract:
@@ -604,22 +538,11 @@ def dsir_select_increment_stream(spark: SparkSession,
     stored stats and folds them into the maintained top-50. Top-k
     merge-stability makes the final state equal the one-shot batch
     selection exactly, whatever the file-to-trigger assignment."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.dsir import (TARGET_LANG, dsir_bucket_stats_df,
                                   dsir_persist_stats)
     from ..views import load
 
-    global _BPE_STREAM_ATEXIT
-    workdir = tempfile.mkdtemp(prefix="dsir_stream_")
-    _BPE_STREAM_DIRS.append(workdir)
-    if not _BPE_STREAM_ATEXIT:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True)
-                     for d in _BPE_STREAM_DIRS])
-        _BPE_STREAM_ATEXIT = True
+    workdir = scratch_dir("dsir_stream_")
 
     docs = load(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % 2 == 0)
@@ -638,7 +561,7 @@ def dsir_select_increment_stream(spark: SparkSession,
     return sink.selected()
 
 
-class StreamingSpanScrubber:
+class StreamingSpanScrubber(ForeachBatchSink):
     """foreachBatch sink: exact-substring dedup WITH REMOVAL (the Lee
     ACL'22 cut, ``repeated_span_scrub_df``) maintained over a stream of
     arriving documents — the span-hash inventory is the accumulated
@@ -664,30 +587,16 @@ class StreamingSpanScrubber:
     needs the same inventory as one suffix-array-sized shuffle); at
     100 TB the store would be hash-range bucketed (the BucketedAggStore
     discipline) so a trigger reads only the buckets its batch hashes
-    touch. Writes use the batch=<id> overwrite discipline (foreachBatch
-    retry replaces its own partial output) and the checkpoint-marker
-    guard shared with the other sinks."""
+    touch."""
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  span_len: int = 30):
-        self.spark = spark
         self.out_dir = out_dir
         self.span_len = span_len
         self.docs_dir = os.path.join(out_dir, "docs")
         self.spans_dir = os.path.join(out_dir, "spans")
-
-    def _read_store(self, root: str,
-                    exclude_batch: int | None = None) -> DataFrame | None:
-        if not os.path.isdir(root):
-            return None
-        subdirs = [d for d in os.listdir(root)
-                   if d.startswith("batch=")
-                   and (exclude_batch is None
-                        or d != f"batch={exclude_batch}")]
-        if not subdirs:
-            return None
-        return self.spark.read.option("basePath", root).parquet(
-            *[os.path.join(root, d) for d in subdirs]).drop("batch")
+        super().__init__(spark, out_dir, {"scrub store": self.docs_dir,
+                                          "span store": self.spans_dir})
 
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.dedup import scrub_cut_positions, span_hash_rows
@@ -730,49 +639,6 @@ class StreamingSpanScrubber:
         finally:
             inv.unpersist()
 
-    def _guard_checkpoint(self, checkpoint_dir: str) -> None:
-        """Same marker discipline as StreamingBpeEncoder: the
-        overwrite-per-batch_id idempotence (docs AND spans stores) is
-        only safe under ONE checkpoint's batch-id sequence."""
-        ckpt = os.path.abspath(checkpoint_dir)
-        marker = os.path.join(self.out_dir, "_checkpoint_marker.json")
-        has_batches = any(
-            os.path.isdir(root) and any(d.startswith("batch=")
-                                        for d in os.listdir(root))
-            for root in (self.docs_dir, self.spans_dir))
-        if os.path.isfile(marker):
-            with open(marker) as f:
-                recorded = json.load(f).get("checkpoint_dir")
-            if recorded == ckpt:
-                return
-            if has_batches:
-                raise RuntimeError(
-                    f"scrub store {self.out_dir!r} was built by the "
-                    f"stream checkpointed at {recorded!r}; running it "
-                    f"with checkpoint {ckpt!r} would restart batch ids "
-                    "at 0 and overwrite earlier batches.")
-        elif has_batches:
-            raise RuntimeError(
-                f"scrub store {self.out_dir!r} contains batch "
-                "subdirectories but no checkpoint marker — refusing to "
-                "run a stream over it (batch-id collisions would "
-                "silently overwrite data).")
-        os.makedirs(self.out_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"checkpoint_dir": ckpt}, f)
-        os.replace(tmp, marker)
-
-    def run(self, doc_stream: DataFrame, checkpoint_dir: str) -> None:
-        self._guard_checkpoint(checkpoint_dir)
-        q = (doc_stream.writeStream
-             .foreachBatch(self.process)
-             .outputMode("append")
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
     def scrubbed(self) -> DataFrame:
         """Union of every trigger's scrubbed rows — the batch
         operator's (doc_id, clean_text, n_cut_spans, n_cut_chars)."""
@@ -797,22 +663,11 @@ def repeated_span_scrub_stream(spark: SparkSession,
     operator's global min(doc_id, pos) selection bit-for-bit, whatever
     the within-file layout. Scratch dirs live until process exit so
     the returned frame stays valid lazily."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..operators.dedup import _scrub_gate_docs
 
-    global _BPE_STREAM_ATEXIT
-    workdir = tempfile.mkdtemp(prefix="scrub_stream_")
-    _BPE_STREAM_DIRS.append(workdir)
-    if not _BPE_STREAM_ATEXIT:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True)
-                     for d in _BPE_STREAM_DIRS])
-        _BPE_STREAM_ATEXIT = True
+    workdir = scratch_dir("scrub_stream_")
 
     corpus = _scrub_gate_docs(spark, sf_dir)
     parts = corpus.withColumn(
@@ -837,7 +692,7 @@ def repeated_span_scrub_stream(spark: SparkSession,
     return sink.scrubbed()
 
 
-class StreamingIvfIndexer:
+class StreamingIvfIndexer(ForeachBatchSink):
     """foreachBatch sink: incremental IVF index maintenance under a
     stream of arriving (vec_id, embedding) rows — the streaming form of
     ``append_to_ivf_index`` (the FAISS ``add`` path), completing the
@@ -852,9 +707,8 @@ class StreamingIvfIndexer:
     ``<index_dir>/stream_postings/batch=<id>/cell=<c>/`` — each trigger
     assigns ONLY its own batch under the committed centroids (one
     Arrow-batched matmul over the batch) and overwrites its own
-    batch=<id> subtree, so a foreachBatch retry replaces its own partial
-    output (the sibling sinks' idempotence discipline; an append into
-    the base generation would double the batch's vectors on retry).
+    batch=<id> subtree (an append into the base generation would double
+    the batch's vectors on retry).
     Probes read base generation + delta with the SAME ``cell`` partition
     pruning on both sides (``_query_ivf_index_rows(extra_postings=...)``)
     — cell is a partition directory level in the delta store too, so an
@@ -878,20 +732,14 @@ class StreamingIvfIndexer:
     directory to one stream)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        self.spark = spark
         self.index_dir = index_dir
         self.stream_dir = os.path.join(index_dir, "stream_postings")
+        super().__init__(spark, self.stream_dir,
+                         {"IVF delta store": self.stream_dir})
 
     def _meta(self) -> dict:
         with open(os.path.join(self.index_dir, "centroids.json")) as f:
             return json.load(f)
-
-    def _batch_dirs(self) -> list[str]:
-        if not os.path.isdir(self.stream_dir):
-            return []
-        return sorted(os.path.join(self.stream_dir, d)
-                      for d in os.listdir(self.stream_dir)
-                      if d.startswith("batch="))
 
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.ivf import _write_postings
@@ -904,54 +752,10 @@ class StreamingIvfIndexer:
                         meta["m_assign"], bool(meta.get("sq8")),
                         mode="overwrite", subdir=f"batch={batch_id}")
 
-    def _guard_checkpoint(self, checkpoint_dir: str) -> None:
-        """Same marker discipline as the sibling sinks: the
-        overwrite-per-batch_id idempotence is only safe under ONE
-        checkpoint's batch-id sequence."""
-        ckpt = os.path.abspath(checkpoint_dir)
-        marker = os.path.join(self.stream_dir, "_checkpoint_marker.json")
-        has_batches = bool(self._batch_dirs())
-        if os.path.isfile(marker):
-            with open(marker) as f:
-                recorded = json.load(f).get("checkpoint_dir")
-            if recorded == ckpt:
-                return
-            if has_batches:
-                raise RuntimeError(
-                    f"IVF delta store {self.stream_dir!r} was built by "
-                    f"the stream checkpointed at {recorded!r}; running "
-                    f"it with checkpoint {ckpt!r} would restart batch "
-                    "ids at 0 and overwrite earlier batches.")
-        elif has_batches:
-            raise RuntimeError(
-                f"IVF delta store {self.stream_dir!r} contains batch "
-                "subdirectories but no checkpoint marker — refusing to "
-                "run a stream over it (batch-id collisions would "
-                "silently overwrite posting deltas).")
-        os.makedirs(self.stream_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"checkpoint_dir": ckpt}, f)
-        os.replace(tmp, marker)
-
-    def run(self, vec_stream: DataFrame, checkpoint_dir: str) -> None:
-        self._guard_checkpoint(checkpoint_dir)
-        q = (vec_stream.writeStream
-             .foreachBatch(self.process)
-             .outputMode("append")
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-
     def delta_postings(self) -> DataFrame | None:
         """Accumulated delta posting rows in the base generation's raw
         layout (batch column dropped), or None before the first batch."""
-        dirs = self._batch_dirs()
-        if not dirs:
-            return None
-        return (self.spark.read.option("basePath", self.stream_dir)
-                .parquet(*dirs).drop("batch"))
+        return self._read_store(self.stream_dir)
 
     def query(self, id_vecs: list, k: int = 10,
               nprobe: int = 8) -> DataFrame:
@@ -1007,7 +811,7 @@ class StreamingIvfIndexer:
         with open(tmp, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, os.path.join(self.index_dir, "centroids.json"))
-        for d in self._batch_dirs():
+        for d in self._batch_dirs(self.stream_dir):
             shutil.rmtree(d, ignore_errors=True)
         return True
 
@@ -1028,21 +832,10 @@ def ann_index_increment_stream(spark: SparkSession, sf_dir: str,
     over it — equals the one-shot ``append_to_ivf_index`` of the whole
     odd half, whatever the file-to-trigger assignment. Scratch dirs
     live until process exit so the returned frame stays valid lazily."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.ivf import _stored_query_rows, build_ivf_index
     from ..views import load
 
-    global _BPE_STREAM_ATEXIT
-    workdir = tempfile.mkdtemp(prefix="ivf_stream_")
-    _BPE_STREAM_DIRS.append(workdir)
-    if not _BPE_STREAM_ATEXIT:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True)
-                     for d in _BPE_STREAM_DIRS])
-        _BPE_STREAM_ATEXIT = True
+    workdir = scratch_dir("ivf_stream_")
 
     emb = load(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 2 == 0)
@@ -1060,7 +853,7 @@ def ann_index_increment_stream(spark: SparkSession, sf_dir: str,
                          k=k, nprobe=nprobe)
 
 
-class StreamingSemanticDedup:
+class StreamingSemanticDedup(ForeachBatchSink):
     """foreachBatch sink: maintain a SEMANTICALLY near-dup-free corpus
     under a stream of (vec_id, embedding) rows — the embedding-space
     counterpart of ``StreamingCorpusDedup`` (whose minhash signatures
@@ -1081,10 +874,8 @@ class StreamingSemanticDedup:
     the pytest pins this divergence explicitly rather than papering
     over it.
 
-    State: two batch=<id>-overwritten stores (the sibling sinks'
-    retry-idempotence discipline — a foreachBatch retry replaces its
-    own partial output): ``corpus_dir`` holds surviving (vec_id,
-    embedding); ``bucket_dir`` holds their exploded sign-LSH band keys
+    State: two batch=<id> stores: ``corpus_dir`` holds surviving
+    (vec_id, embedding); ``bucket_dir`` holds their exploded sign-LSH band keys
     (seed-deterministic ``band_buckets``), so the cross-corpus check is
     a band equi-join against a SCAN — the accumulated corpus is never
     re-hashed. Candidates are verified with the exact zip_with/
@@ -1102,28 +893,16 @@ class StreamingSemanticDedup:
                  band_bits: int = 16, seed: int = 42,
                  bucket_dir: str | None = None,
                  cc_checkpoint_dir: str | None = None):
-        self.spark = spark
         self.corpus_dir = corpus_dir
         self.bucket_dir = bucket_dir or corpus_dir.rstrip("/") + "_buckets"
+        super().__init__(spark, corpus_dir,
+                         {"semantic-dedup corpus": corpus_dir,
+                          "bucket store": self.bucket_dir})
         self.threshold = threshold
         self.n_planes = n_planes
         self.band_bits = band_bits
         self.seed = seed
         self.cc_checkpoint_dir = cc_checkpoint_dir
-
-    def _read_store(self, root: str,
-                    exclude_batch: int | None = None) -> DataFrame | None:
-        if not os.path.isdir(root):
-            return None
-        subdirs = [d for d in os.listdir(root)
-                   if d.startswith("batch=")
-                   and (exclude_batch is None
-                        or d != f"batch={exclude_batch}")]
-        if not subdirs:
-            return None
-        return (self.spark.read.option("basePath", root)
-                .parquet(*[os.path.join(root, d) for d in subdirs])
-                .drop("batch"))
 
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.graph import connected_components_df
@@ -1205,58 +984,7 @@ class StreamingSemanticDedup:
             if keep_ids is not None:
                 keep_ids.unpersist()
             if cc_dir is not None:
-                sc = self.spark.sparkContext
-                jp = sc._jvm.org.apache.hadoop.fs.Path(cc_dir)
-                jp.getFileSystem(sc._jsc.hadoopConfiguration()) \
-                    .delete(jp, True)
-
-    def _has_batches(self) -> bool:
-        return any(
-            os.path.isdir(root) and any(d.startswith("batch=")
-                                        for d in os.listdir(root))
-            for root in (self.corpus_dir, self.bucket_dir))
-
-    def _guard_checkpoint(self, checkpoint_dir: str) -> None:
-        """The sibling sinks' marker discipline: overwrite-per-batch_id
-        idempotence is only safe under ONE checkpoint's batch-id
-        sequence, and the corpus + bucket stores rise and fall
-        together."""
-        ckpt = os.path.abspath(checkpoint_dir)
-        marker = os.path.join(self.corpus_dir, "_checkpoint_marker.json")
-        has_batches = self._has_batches()
-        if os.path.isfile(marker):
-            with open(marker) as f:
-                recorded = json.load(f).get("checkpoint_dir")
-            if recorded == ckpt:
-                return
-            if has_batches:
-                raise RuntimeError(
-                    f"semantic-dedup store {self.corpus_dir!r} (+ buckets "
-                    f"{self.bucket_dir!r}) was built by the stream "
-                    f"checkpointed at {recorded!r}; running it with "
-                    f"checkpoint {ckpt!r} would restart batch ids at 0 "
-                    "and overwrite earlier batches.")
-        elif has_batches:
-            raise RuntimeError(
-                f"semantic-dedup store {self.corpus_dir!r} contains batch "
-                "subdirectories but no checkpoint marker — refusing to "
-                "run a stream over it (batch-id collisions would "
-                "silently overwrite survivors).")
-        os.makedirs(self.corpus_dir, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"checkpoint_dir": ckpt}, f)
-        os.replace(tmp, marker)
-
-    def run(self, vec_stream: DataFrame, checkpoint_dir: str) -> None:
-        self._guard_checkpoint(checkpoint_dir)
-        q = (vec_stream.writeStream
-             .foreachBatch(self.process)
-             .outputMode("append")
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+                self._delete_dir(cc_dir)
 
     def corpus(self) -> DataFrame:
         out = self._read_store(self.corpus_dir)

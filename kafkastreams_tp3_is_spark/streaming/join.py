@@ -26,32 +26,13 @@ stateful.py's sizing note).
 
 from __future__ import annotations
 
-import atexit
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# scratch sink dirs returned (as lazy reads) by the fixtures below;
-# removed at PROCESS EXIT only — a caller may hold the returned
-# unevaluated DataFrame for arbitrarily long (same contract as
-# operators.ivf's _BUILD_DIRS, ADVICE r7/r8)
-_SINK_DIRS: list[str] = []
-_ATEXIT_REGISTERED = False
-
-
-def _register_sink_dir(path: str) -> None:
-    global _ATEXIT_REGISTERED
-    _SINK_DIRS.append(path)
-    if not _ATEXIT_REGISTERED:
-        def _cleanup() -> None:
-            import shutil
-
-            for d in _SINK_DIRS:
-                shutil.rmtree(d, ignore_errors=True)
-        atexit.register(_cleanup)
-        _ATEXIT_REGISTERED = True
+from ..cache import scratch_dir
 
 
 def stream_stream_interval_join(left: DataFrame, right: DataFrame,
@@ -163,8 +144,7 @@ def _drain_to_scratch(spark: SparkSession, out: DataFrame,
     process exit; the inputs + checkpoint under ``workdir`` are freed as
     soon as the query drains."""
     out_schema = out.schema
-    sink_dir = tempfile.mkdtemp(prefix="ssjoin_sink_")
-    _register_sink_dir(sink_dir)
+    sink_dir = scratch_dir("ssjoin_sink_")
 
     conf_key = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(conf_key)

@@ -63,3 +63,40 @@ def test_spread_probe_cache_is_bounded(spark):
     views.spread(df.select((F.col("doc_id") + 1).alias("doc_id")))
     assert len(views._SPREAD_PROBE_CACHE) <= views._SPREAD_PROBE_CACHE_MAX
     views._SPREAD_PROBE_CACHE.clear()
+
+
+def test_scratch_dir_concurrent_calls_share_one_exit_hook(monkeypatch):
+    """scratch_dir from many threads: every call gets its own existing
+    directory, exactly one atexit hook is registered, and that hook
+    removes every directory handed out."""
+    import atexit
+    import os
+    import threading
+
+    from kafkastreams_tp3_is_spark import cache
+
+    hooks = []
+    monkeypatch.setattr(atexit, "register", hooks.append)
+    monkeypatch.setattr(cache, "_SCRATCH_DIRS", [])
+    monkeypatch.setattr(cache, "_SCRATCH_HOOKED", False)
+    got = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(
+                       target=lambda: got.extend(
+                           cache.scratch_dir("scratch_test_")
+                           for _ in range(5)))
+                   for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 80 and len(set(got)) == 80
+    assert all(os.path.isdir(d) for d in got)
+    assert len(hooks) == 1
+    hooks[0]()
+    assert not any(os.path.exists(d) for d in got)

@@ -2406,3 +2406,98 @@ def test_streaming_semantic_dedup_greedy_online_semantics(spark, tmp_path):
     sink5 = StreamingSemanticDedup(spark, g_dir, threshold=0.95)
     with _pytest.raises(RuntimeError, match="no checkpoint marker"):
         sink5.run(stream(), str(tmp_path / "sem_ckpt_a"))
+
+
+def _contract_case(spark, planted_docs, name, root):
+    """(make_sink, batch, output, marker_dir) for one streaming sink: a
+    factory for a fresh sink over the store under ``root``, one
+    micro-batch, the sink's accumulated-output accessor, and where its
+    checkpoint marker lives on disk (an on-disk format: stores written
+    by earlier versions must still resume)."""
+    from kafkastreams_tp3_is_spark.streaming import incremental as inc
+    from kafkastreams_tp3_is_spark.views import load
+
+    docs = load(spark, SF_DIR, "documents")
+    emb = load(spark, SF_DIR, "embeddings")
+    odd_vecs = emb.select("vec_id", "embedding").where(
+        F.col("vec_id") % 10 == 1)
+    if name == "corpus_dedup":
+        store = str(root / "corpus")
+        return (lambda: inc.StreamingCorpusDedup(
+                    spark, store, jaccard_threshold=0.7),
+                planted_docs[0].where(F.col("doc_id") < 103),
+                lambda s: s.corpus(), store)
+    if name == "bpe_encoder":
+        from kafkastreams_tp3_is_spark.operators.text import (
+            bpe_persist_tokenizer)
+        tok, out = str(root / "tok"), str(root / "tokens")
+        bpe_persist_tokenizer(docs.where(F.col("doc_id") % 2 == 0), tok,
+                              n_merges=8)
+        return (lambda: inc.StreamingBpeEncoder(spark, tok, out),
+                docs.select("doc_id", "text").where(
+                    F.col("doc_id") % 10 == 1),
+                lambda s: s.tokens(), out)
+    if name == "dsir_selector":
+        from kafkastreams_tp3_is_spark.operators.dsir import (
+            TARGET_LANG, dsir_bucket_stats_df, dsir_persist_stats)
+        stats, out = str(root / "stats"), str(root / "topk")
+        dsir_persist_stats(dsir_bucket_stats_df(
+            docs.where(F.col("doc_id") % 2 == 0), TARGET_LANG), stats)
+        return (lambda: inc.StreamingDsirSelector(spark, stats, out, k=10),
+                docs.select("doc_id", "lang", "text").where(
+                    F.col("doc_id") % 2 == 1),
+                lambda s: s.selected(), out)
+    if name == "span_scrubber":
+        from kafkastreams_tp3_is_spark.operators.dedup import (
+            _scrub_gate_docs)
+        out = str(root / "scrub")
+        return (lambda: inc.StreamingSpanScrubber(spark, out),
+                _scrub_gate_docs(spark, SF_DIR).where(
+                    (F.col("doc_id") % 25 == 0)
+                    | (F.col("doc_id") >= 3_000_000)),
+                lambda s: s.scrubbed(), out)
+    if name == "ivf_indexer":
+        from kafkastreams_tp3_is_spark.operators.ivf import build_ivf_index
+        ix = str(root / "index")
+        build_ivf_index(emb.where(F.col("vec_id") % 2 == 0), ix,
+                        n_centroids=8, m_assign=2)
+        return (lambda: inc.StreamingIvfIndexer(spark, ix), odd_vecs,
+                lambda s: s.delta_postings(),
+                os.path.join(ix, "stream_postings"))
+    assert name == "semantic_dedup"
+    store = str(root / "sem")
+    return (lambda: inc.StreamingSemanticDedup(spark, store, threshold=0.95),
+            odd_vecs, lambda s: s.corpus(), store)
+
+
+@pytest.mark.parametrize("sink_name", [
+    "corpus_dedup", "bpe_encoder", "dsir_selector", "span_scrubber",
+    "ivf_indexer", "semantic_dedup"])
+def test_sink_contract(spark, planted_docs, tmp_path, sink_name):
+    """The contract every foreachBatch sink shares: (a) a truncated
+    checkpoint marker fails fast with the actionable refuse-to-run
+    error (not a JSON decode traceback) and adopt=True rewrites it;
+    (b) replaying a batch id through process() leaves the sink's output
+    exactly as one call left it."""
+    make, batch, output, marker_dir = _contract_case(
+        spark, planted_docs, sink_name, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    sink = make()
+    sink._guard_checkpoint(ckpt)
+    marker = os.path.join(marker_dir, "_checkpoint_marker.json")
+    assert os.path.isfile(marker)
+
+    sink.process(batch, 0)
+    once = sorted(tuple(r) for r in output(sink).collect())
+    assert once
+    sink.process(batch, 0)              # foreachBatch replay of id 0
+    assert sorted(tuple(r) for r in output(sink).collect()) == once
+
+    with open(marker, "w") as f:
+        f.write('{"checkpoint_dir": "/some/pa')
+    sink2 = make()
+    with pytest.raises(RuntimeError, match="cannot be read"):
+        sink2._guard_checkpoint(ckpt)
+    sink2._guard_checkpoint(ckpt, adopt=True)
+    with open(marker) as f:
+        assert json.load(f)["checkpoint_dir"] == os.path.abspath(ckpt)
